@@ -5,8 +5,15 @@ Baseline: exact brute-force cosine top-k (all-pairs join + per-query window)
 — correct at any scale that can afford |Q|×|N| compare, and the oracle for
 the approximate paths. Scale path: LSH bucketing via random hyperplane signs
 (deterministic md5-seeded planes — reproducible, no engine RNG) that turns
-the all-pairs join into a bucket equi-join, plus an IVF variant using
-per-dimension argmax as a cheap deterministic coarse quantizer.
+the all-pairs join into a bucket equi-join, plus IVF variants over a
+deterministic md5-sampled coarse quantizer.
+
+Every numpy path scores with ONE exact-cosine kernel: ``_cosine`` (the
+chunked block form, plus the row-pair form ``_cosine_pairs`` for the IVF-PQ
+refine) computes round(dot / (|q|·|x|), 6) with zero norms divided as 1,
+the DuckDB oracles' list_cosine_similarity formula, and ``_topk`` is the one
+(cosine desc, id asc) selector. The index structures (broadcast, LSH
+buckets, IVF cells, PQ shortlists) only choose which rows meet in it.
 
 Reference: ``knn_similarity.py:42-98`` computes sklearn brute cosine top-5
 over customer embeddings; our brute_topk with k=5 is its exact analog.
@@ -14,8 +21,17 @@ over customer embeddings; our brute_topk with k=5 is its exact analog.
 
 from __future__ import annotations
 
+import sys
+from functools import partial
+
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# the Arrow-batch closures below call this module's kernels inside Python
+# workers, which need not have the package on their path: ship the
+# module's functions by value instead of as import references
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _as_double(col):
@@ -33,6 +49,114 @@ def _norm(a):
 #: index sides up to this many rows take the broadcast brute-BLAS path
 #: (~50 MB at 64 float64 dims — a dim table); above it, LSH bucket joins.
 BRUTE_INDEX_MAX_ROWS = 100_000
+
+#: query rows per ``_cosine`` block: the (chunk × N) working set stays
+#: cache-sized — big fresh allocations, not FLOPs, are the kernel's cost.
+COSINE_CHUNK = 512
+
+
+def _safe_norms(mat):
+    """Row L2 norms with zero norms replaced by 1, so a zero vector's
+    cosine is 0 (its dot is 0) instead of NaN — the convention every
+    DuckDB oracle mirrors."""
+    import numpy as np
+
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0] = 1.0
+    return norms
+
+
+def _cosine(q, x, buf: dict | None = None):
+    """The exact-cosine block kernel: yields ``(offset, block)`` with
+    block[i, j] = round(q[offset+i]·x[j] / (|q[offset+i]|·|x[j]|), 6).
+
+    The RAW dot is divided by the norm product — DuckDB
+    list_cosine_similarity's operation order, so the 6-dp round sees the
+    closest possible double on both engines. Query rows run in chunks of
+    COSINE_CHUNK, computed in place into buffers kept in ``buf`` (a dict
+    the caller holds across Arrow batches or groups): fresh (chunk × N)
+    allocations pay first-touch page faults that dominate the kernel on
+    virtualized hosts (r10: a fresh 32 MB divide measured 8.5 s on first
+    touch vs 0.04 s warm). Each yielded block is overwritten by the next."""
+    import numpy as np
+
+    buf = {} if buf is None else buf
+    n = len(x)
+    size = min(len(q), COSINE_CHUNK) * n
+    if buf.get("sims") is None or buf["sims"].size < size:
+        buf["sims"], buf["den"] = np.empty(size), np.empty(size)
+    qn, xn = _safe_norms(q), _safe_norms(x)
+    for c0 in range(0, len(q), COSINE_CHUNK):
+        qc = q[c0 : c0 + COSINE_CHUNK]
+        sims = buf["sims"][: len(qc) * n].reshape(len(qc), n)
+        den = buf["den"][: len(qc) * n].reshape(len(qc), n)
+        np.dot(qc, x.T, out=sims)
+        np.multiply(qn[c0 : c0 + len(qc), None], xn[None, :], out=den)
+        np.divide(sims, den, out=sims)
+        np.round(sims, 6, out=sims)
+        yield c0, sims
+
+
+def _cosine_pairs(a, b):
+    """Row-pair form of ``_cosine``: cosine of a[i] with b[i], same
+    formula, rounding and zero-norm convention."""
+    import numpy as np
+
+    return np.round(np.einsum("ij,ij->i", a, b) / (_safe_norms(a) * _safe_norms(b)), 6)
+
+
+def _topk(qids, q, ids, x, k: int, buf: dict | None = None):
+    """Exact top-k neighbours of each query row among the rows of ``x``
+    under the total order (cosine desc, id asc), the row carrying the
+    query's own id excluded. Returns a pandas frame
+    (query_id, rank, neighbor_id, cosine), grouped by query in input order.
+
+    The k-th largest cosine per row comes from one vectorized partition;
+    only the tied-or-above candidates then get the (-cosine, id) lexsort."""
+    import numpy as np
+    import pandas as pd
+
+    n = len(ids)
+    qi, nj, rk = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0, np.int32)]
+    cos = [np.empty(0)]
+    if n and len(qids):
+        # column of each query's own id (-1 when it is not an index row)
+        sorter = np.argsort(ids, kind="stable")
+        pos = np.minimum(np.searchsorted(ids, qids, sorter=sorter), n - 1)
+        own = np.where(ids[sorter[pos]] == qids, sorter[pos], -1)
+        kk = min(k, n)
+        for c0, sims in _cosine(q, x, buf):
+            rows = np.flatnonzero(own[c0 : c0 + len(sims)] >= 0)
+            sims[rows, own[c0 + rows]] = -np.inf
+            kv = np.partition(sims, n - kk, axis=1)[:, n - kk]
+            for i, row in enumerate(sims):
+                cand = np.flatnonzero(row >= kv[i])
+                cand = cand[row[cand] > -np.inf]
+                order = cand[np.lexsort((ids[cand], -row[cand]))][:k]
+                qi.append(np.full(len(order), c0 + i))
+                rk.append(np.arange(1, len(order) + 1, dtype=np.int32))
+                nj.append(order)
+                cos.append(row[order])
+    return pd.DataFrame({
+        "query_id": qids[np.concatenate(qi)],
+        "rank": np.concatenate(rk),
+        "neighbor_id": ids[np.concatenate(nj)],
+        "cosine": np.concatenate(cos),
+    })
+
+
+def _dup_pairs(qids, q, ids, x, threshold: float, buf: dict | None = None):
+    """Near-duplicate pairs (vec_a < vec_b, cosine >= threshold) between
+    query rows and index rows, as a pandas frame (vec_a, vec_b, cosine)."""
+    import numpy as np
+    import pandas as pd
+
+    frames = [pd.DataFrame({"vec_a": qids[:0], "vec_b": ids[:0], "cosine": np.empty(0)})]
+    for c0, sims in _cosine(q, x, buf):
+        qc = qids[c0 : c0 + len(sims)]
+        qi, ni = np.nonzero((ids[None, :] > qc[:, None]) & (sims >= threshold))
+        frames.append(pd.DataFrame({"vec_a": qc[qi], "vec_b": ids[ni], "cosine": sims[qi, ni]}))
+    return pd.concat(frames, ignore_index=True)
 
 
 def _plane_matrix(n_tables: int, n_planes: int, dim: int):
@@ -55,22 +179,18 @@ def _plane_matrix(n_tables: int, n_planes: int, dim: int):
     ])
 
 
-def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize embeddings so cosine = dot (cheaper pairwise math).
-    Zero vectors keep norm 1 (cosine 0) instead of dividing to NaN."""
-    v = _as_double(F.col(vec_col))
-    n = _norm(v)
-    safe_n = F.when(n == 0, F.lit(1.0)).otherwise(n)
-    return emb.withColumn("unit", F.transform(v, lambda x: x / safe_n))
-
-
 def brute_topk(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact cosine top-k neighbors per vector: all-pairs join + window.
 
     The join is |N|² — fine for dim-table-sized inputs (the reference's
-    customer set); at 100 TB use lsh_topk/ivf_topk below. Ties broken by
-    neighbor id for cross-engine determinism."""
-    u = with_unit_vectors(emb, vec_col).select(id_col, "unit")
+    customer set); at 100 TB use lsh_topk/ivf_hash_topk below. Ties broken
+    by neighbor id for cross-engine determinism. The SQL-expression
+    reference the numpy kernel is tested against: vectors are
+    pre-normalized (zero vectors keep norm 1, cosine 0) so cosine = dot."""
+    v = _as_double(F.col(vec_col))
+    n = _norm(v)
+    safe_n = F.when(n == 0, F.lit(1.0)).otherwise(n)
+    u = emb.select(id_col, F.transform(v, lambda x: x / safe_n).alias("unit"))
     a = u.select(F.col(id_col).alias("query_id"), F.col("unit").alias("ua"))
     b = u.select(F.col(id_col).alias("neighbor_id"), F.col("unit").alias("ub"))
     pairs = (
@@ -85,99 +205,45 @@ def brute_topk(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str 
     )
 
 
-def brute_topk_blas(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy matmul (FAISS-flat shape).
-
-    Semantics identical to brute_topk (same rounding, same tiebreak); the
-    physical strategy differs: the index side (all vectors) is collected to
-    a numpy matrix and broadcast (~1 MB per 2k×64 — a dim table), and each
-    Arrow batch of queries computes one BLAS gemm + argpartition. No |N|²
-    row join materializes anywhere. This is the justified Pandas-path
-    exception (SURVEY §2.13): a dense matmul has no efficient built-in
-    expression. For index sides too big to broadcast, use lsh_topk.
-    """
+def _broadcast_scan(emb: DataFrame, id_col: str, vec_col: str, kernel, schema: str) -> DataFrame:
+    """Run ``kernel(qids, q, ids, x, buf=...)`` -> pandas frame over every
+    Arrow batch of queries against the WHOLE index, collected to the
+    driver and broadcast (~1 MB per 2k×64 — a dim table). No |N|² row join
+    materializes anywhere. This is the justified Pandas-path exception
+    (SURVEY §2.13): a dense matmul has no efficient built-in expression."""
     import numpy as np
-    import pandas as pd
 
     spark = emb.sparkSession
-    local = emb.select(id_col, _as_double(F.col(vec_col)).alias("v")).toPandas()
-    ids = local[id_col].to_numpy()
-    mat = np.stack(local["v"].to_numpy())
-    # keep RAW vectors and divide the dot by the norm product — the same
-    # operation order as DuckDB list_cosine_similarity (dot/(|a||b|)), so
-    # the 6-dp round sees the closest possible double on both engines.
-    # Zero vectors get norm 1 -> cosine 0 instead of NaN.
-    norms = np.linalg.norm(mat, axis=1)
-    norms = np.where(norms == 0, 1.0, norms)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
+    src = emb.select(id_col, _as_double(F.col(vec_col)).alias("v"))
+    local = src.toPandas()
+    b_ids = spark.sparkContext.broadcast(local[id_col].to_numpy())
+    b_mat = spark.sparkContext.broadcast(np.stack(local["v"].to_numpy()))
 
     def batches(it):
-        idx_of = None
-        sims_buf = den_buf = None
-        CHUNK = 512
+        buf: dict = {}
         for pdf in it:
-            ids_l = b_ids.value
-            m = b_mat.value
-            n_idx = m.shape[0]
-            if idx_of is None:
-                idx_of = {int(i): j for j, i in enumerate(ids_l)}
-            if sims_buf is None:
-                # preallocate ONCE per worker and compute into the buffers
-                # with out= — fresh (chunk x N) allocations per chunk pay
-                # first-touch page faults that dominate the kernel on
-                # virtualized hosts (r10: a fresh 32 MB divide measured
-                # 8.5 s on first touch vs 0.04 s warm on this VM class)
-                sims_buf = np.empty((CHUNK, n_idx))
-                den_buf = np.empty((CHUNK, n_idx))
-            out = []
-            # chunk the Arrow batch so the (chunk × N) working set stays
-            # cache-sized — big fresh allocations are the kernel's real
-            # cost at scale (memory bandwidth, not FLOPs) — and do the
-            # divide/round in place: the VALUES are unchanged
-            # (dot/(qn_i·mn_j) then round, the DuckDB operation order)
-            for c0 in range(0, len(pdf), CHUNK):
-                cpdf = pdf.iloc[c0 : c0 + CHUNK]
-                q = np.stack(cpdf["v"].to_numpy())
-                qn = np.linalg.norm(q, axis=1)
-                qn = np.where(qn == 0, 1.0, qn)
-                sims = sims_buf[: len(cpdf)]
-                den = den_buf[: len(cpdf)]
-                np.dot(q, m.T, out=sims)
-                np.multiply(qn[:, None], b_norms.value[None, :], out=den)
-                np.divide(sims, den, out=sims)
-                np.round(sims, 6, out=sims)
-                qids = cpdf[id_col].to_numpy()
-                # exclude self O(1)/row via the id->column map
-                for i, qid in enumerate(qids):
-                    j = idx_of.get(int(qid))
-                    if j is not None:
-                        sims[i, j] = -np.inf
-                # k-th largest per row in one vectorized partition (taken
-                # from the ascending end — no negated copies); then each
-                # row only lexsorts its tied-or-above candidate set (the
-                # exact (-cosine, id asc) tiebreak the SQL oracle uses)
-                # instead of the whole index side
-                kk = min(k, n_idx)
-                kv = np.partition(sims, n_idx - kk, axis=1)[:, n_idx - kk]
-                for i, qid in enumerate(qids):
-                    row = sims[i]
-                    cand = np.nonzero(row >= kv[i])[0]
-                    order = cand[np.lexsort((ids_l[cand], -row[cand]))][:k]
-                    for r, j in enumerate(order, 1):
-                        out.append((int(qid), r, int(ids_l[j]), float(row[j])))
-            yield pd.DataFrame(out, columns=["query_id", "rank", "neighbor_id", "cosine"])
+            if len(pdf):
+                q = np.stack(pdf["v"].to_numpy())
+                yield kernel(pdf[id_col].to_numpy(), q, b_ids.value, b_mat.value, buf=buf)
 
     # spread the query side across cores: a dim-table-scale corpus often
     # sits in ONE parquet row group, and without this the whole gemm runs
     # as a single task on a single worker (r10: the entire sf0.1
     # ann_brute wall was one core's page-fault anneal). The shuffle moves
     # |N| rows — noise — and per-row output is partitioning-independent.
-    src = emb.select(id_col, _as_double(F.col(vec_col)).alias("v")).repartition(
-        spark.sparkContext.defaultParallelism
+    return src.repartition(spark.sparkContext.defaultParallelism).mapInPandas(batches, schema=schema)
+
+
+def brute_topk_blas(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Exact cosine top-k via Arrow-batched numpy matmul (FAISS-flat shape).
+
+    Semantics identical to brute_topk (same rounding, same tiebreak); the
+    physical strategy differs: the index side is broadcast and each Arrow
+    batch of queries runs the shared ``_topk`` kernel against it. For
+    index sides too big to broadcast, use lsh_topk."""
+    return _broadcast_scan(
+        emb, id_col, vec_col, partial(_topk, k=k), "query_id long, rank int, neighbor_id long, cosine double"
     )
-    return src.mapInPandas(batches, schema="query_id long, rank int, neighbor_id long, cosine double")
 
 
 def embedding_near_dup(
@@ -195,46 +261,9 @@ def embedding_near_dup(
     its recall on a dataset is a fixed measurable number)."""
     n = emb.count()
     if n <= max_broadcast_rows:
-        return _near_dup_blas(emb, threshold, id_col, vec_col)
+        kernel = partial(_dup_pairs, threshold=threshold)
+        return _broadcast_scan(emb, id_col, vec_col, kernel, "vec_a long, vec_b long, cosine double")
     return near_dup_lsh(emb, threshold, n_planes=_auto_planes(n), id_col=id_col, vec_col=vec_col)
-
-
-def _near_dup_blas(emb: DataFrame, threshold: float, id_col: str, vec_col: str) -> DataFrame:
-    """Exact near-dup via the brute_topk_blas strategy: broadcast raw
-    matrix + norms, one gemm per Arrow batch, emit (a<b, cos>=t) pairs.
-    Cosine in DuckDB list_cosine_similarity operation order."""
-    import numpy as np
-    import pandas as pd
-
-    spark = emb.sparkSession
-    local = emb.select(id_col, _as_double(F.col(vec_col)).alias("v")).toPandas()
-    ids = local[id_col].to_numpy()
-    mat = np.stack(local["v"].to_numpy())
-    norms = np.linalg.norm(mat, axis=1)
-    norms = np.where(norms == 0, 1.0, norms)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
-
-    def batches(it):
-        for pdf in it:
-            ids_l = b_ids.value
-            q = np.stack(pdf["v"].to_numpy())
-            qn = np.linalg.norm(q, axis=1)
-            qn = np.where(qn == 0, 1.0, qn)
-            qids = pdf[id_col].to_numpy()
-            sims = np.round((q @ b_mat.value.T) / np.outer(qn, b_norms.value), 6)
-            qi, ni = np.where((ids_l[None, :] > qids[:, None]) & (sims >= threshold))
-            yield pd.DataFrame(
-                {"vec_a": qids[qi], "vec_b": ids_l[ni], "cosine": sims[qi, ni]}
-            )
-
-    # same single-row-group hazard as brute_topk_blas (r10): spread the
-    # query side so the gemm parallelizes across cores
-    src = emb.select(id_col, _as_double(F.col(vec_col)).alias("v")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return src.mapInPandas(batches, schema="vec_a long, vec_b long, cosine double")
 
 
 def near_dup_lsh(
@@ -263,17 +292,13 @@ def near_dup_lsh(
     u = _lsh_buckets(emb, n_planes, n_tables, dim, id_col, vec_col)
 
     import numpy as np
-    import pandas as pd
 
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(columns=["vec_a", "vec_b", "cosine"])
+    buf: dict = {}
+
+    def bucket_pairs(pdf):
         ids = pdf["vid"].to_numpy()
         mat = np.stack(pdf["v"].to_numpy())
-        norms = pdf["norm"].to_numpy()
-        sims = np.round((mat @ mat.T) / np.outer(norms, norms), 6)
-        ai, bi = np.where((ids[None, :] > ids[:, None]) & (sims >= threshold))
-        return pd.DataFrame({"vec_a": ids[ai], "vec_b": ids[bi], "cosine": sims[ai, bi]})
+        return _dup_pairs(ids, mat, ids, mat, threshold, buf)
 
     # explicit keyed repartition before the grouped-map (r12, the r11
     # serve_greedy rule): AQE coalesces the grouped-map exchange by BYTES
@@ -294,7 +319,7 @@ def near_dup_lsh(
 def _lsh_buckets(
     emb: DataFrame, n_planes: int, n_tables: int, dim: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Shared numpy bucketizer: (vid, bucket, v raw, norm) — one row per
+    """Shared numpy bucketizer: (vid, bucket, v raw) — one row per
     (vector, table). Plane matrix from _plane_matrix (the single
     derivation); projections as one gemm per Arrow batch."""
     import numpy as np
@@ -307,8 +332,6 @@ def _lsh_buckets(
     def bucketize(it):
         for pdf in it:
             mat = np.stack(pdf[vec_col].apply(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
-            norms = np.linalg.norm(mat, axis=1)
-            norms = np.where(norms == 0, 1.0, norms)
             # project the RAW vectors (signs are scale-invariant) — the same
             # inputs hyperplane_signs feeds its SQL fold, keeping the two
             # paths bucket-identical even for near-zero projections
@@ -324,7 +347,6 @@ def _lsh_buckets(
                             "vid": ids,
                             "bucket": [f"{t}_{c}" for c in codes],
                             "v": list(mat),
-                            "norm": norms,
                         }
                     )
                 )
@@ -342,7 +364,7 @@ def _lsh_buckets(
 
     src = spread(emb.select(id_col, vec_col))
     return src.mapInPandas(
-        bucketize, schema="vid long, bucket string, v array<double>, norm double"
+        bucketize, schema="vid long, bucket string, v array<double>"
     )
 
 
@@ -531,7 +553,6 @@ def lsh_topk(
     kernel emits only each query's within-bucket top-k (n·k rows, chunked
     gemm), so a hot bucket costs compute, never an n² Arrow batch."""
     import numpy as np
-    import pandas as pd
 
     if n_planes is None:
         n_planes = _auto_planes(emb.count())
@@ -541,39 +562,19 @@ def lsh_topk(
     # expressions per row, ~10x slower)
     u = _lsh_buckets(emb, n_planes, n_tables, dim, id_col, vec_col)
 
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    buf: dict = {}
+
+    def bucket_topk(pdf):
         # per-QUERY top-k inside the bucket, not all n² pairs: a hot
         # bucket's pair output is n² rows in ONE Arrow batch (the 60×
         # probe crashed workers on a single 1.7 GB direct buffer before
         # this). Result-identical: within any bucket the candidate order
         # is the same (-cosine, id asc) total order the final window
         # uses, and bucket candidates ⊆ global candidates, so every
-        # global-top-k neighbor ranks ≤ k in each shared bucket. Chunked
-        # gemm keeps the sims working set cache-sized (never n×n).
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
+        # global-top-k neighbor ranks ≤ k in each shared bucket.
         ids = pdf["vid"].to_numpy()
         mat = np.stack(pdf["v"].to_numpy())
-        norms = pdf["norm"].to_numpy()
-        kk = min(k, n - 1)
-        out_q, out_n, out_c = [], [], []
-        for c0 in range(0, n, 1024):
-            q = mat[c0 : c0 + 1024]
-            sims = q @ mat.T
-            np.divide(sims, norms[c0 : c0 + 1024, None] * norms[None, :], out=sims)
-            np.round(sims, 6, out=sims)
-            for i in range(sims.shape[0]):
-                sims[i, c0 + i] = -np.inf  # exclude self (vid unique per bucket)
-            kv = np.partition(sims, n - kk, axis=1)[:, n - kk]
-            for i in range(sims.shape[0]):
-                row = sims[i]
-                cand = np.nonzero(row >= kv[i])[0]
-                order = cand[np.lexsort((ids[cand], -row[cand]))][:kk]
-                out_q.extend([ids[c0 + i]] * len(order))
-                out_n.extend(ids[order])
-                out_c.extend(row[order])
-        return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cosine": out_c})
+        return _topk(ids, mat, ids, mat, k, buf).drop(columns="rank")
 
     # explicit keyed repartition before the grouped-map (r12, the r11
     # serve_greedy rule): AQE coalesces the grouped-map exchange by BYTES
@@ -582,7 +583,7 @@ def lsh_topk(
     pairs = (
         u.repartition(u.sparkSession.sparkContext.defaultParallelism, "bucket")
         .groupBy("bucket")
-        .applyInPandas(bucket_pairs, schema="query_id long, neighbor_id long, cosine double")
+        .applyInPandas(bucket_topk, schema="query_id long, neighbor_id long, cosine double")
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cosine").alias("cosine"))
     )
@@ -740,20 +741,20 @@ def semdedup(
     id_type = emb.schema[id_col].dataType.simpleString()
     tau = threshold
 
+    buf: dict = {}
+
     def cell_stats(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vid").reset_index(drop=True)
         X = np.stack(pdf["v"].to_numpy())
-        nrm = np.linalg.norm(X, axis=1, keepdims=True)
-        nrm[nrm == 0] = 1.0
-        U = X / nrm
-        S = np.round(U @ U.T, 6)
         n = len(pdf)
         n_dups = np.zeros(n, dtype=np.int64)
         mx = np.full(n, -1.0)
-        for i in range(1, n):
-            lower = S[i, :i]
-            n_dups[i] = int((lower >= tau).sum())
-            mx[i] = lower.max()
+        for c0, S in _cosine(X, X, buf):
+            # row i sees only its lower-id members j < i; cosines are >= -1,
+            # so -1.0 fill leaves each max unchanged and is row 0's sentinel
+            lower = np.arange(n)[None, :] < np.arange(c0, c0 + len(S))[:, None]
+            n_dups[c0 : c0 + len(S)] = ((S >= tau) & lower).sum(axis=1)
+            mx[c0 : c0 + len(S)] = np.where(lower, S, -1.0).max(axis=1)
         return pd.DataFrame({
             "vec_id": pdf["vid"],
             "cell": pdf["cell"].astype("int32"),
@@ -788,8 +789,7 @@ def ivf_hash_topk(
     ``n_cells`` corpus vectors with the smallest md5('ivf_' || id) — a
     seeded random sample (FAISS-style random init without Lloyd rounds),
     so the whole index/probe/re-rank path is reproducible cross-engine
-    and carries a FULL DuckDB hash oracle, unlike the KMeans variant
-    (``ivf_topk``) whose float-sum centroid updates aren't bit-stable.
+    and carries a FULL DuckDB hash oracle.
 
     Every vector indexes into its argmax-cosine cell; each query probes
     its ``n_probe`` best cells; candidates meet in a cell equi-join
@@ -842,45 +842,17 @@ def ivf_hash_topk(
     import numpy as np
     import pandas as pd
 
-    kk = k
     id_type = emb.schema[id_col].dataType.simpleString()
+    buf: dict = {}
 
-    def cell_topk(qpdf: pd.DataFrame, xpdf: pd.DataFrame):
+    def cell_topk(qpdf, xpdf):
+        # a cell present on only one cogroup side has nothing to score
         if qpdf.empty or xpdf.empty:
             return pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
-        Q = np.stack(qpdf["v"].to_numpy())
-        X = np.stack(xpdf["v"].to_numpy())
-        qn = np.linalg.norm(Q, axis=1, keepdims=True)
-        xn = np.linalg.norm(X, axis=1, keepdims=True)
-        qn[qn == 0] = 1.0
-        xn[xn == 0] = 1.0
-        S = np.round((Q / qn) @ (X / xn).T, 6)
-        qids = qpdf["vid"].to_numpy()
-        xids = xpdf["vid"].to_numpy()
-        # (k+1)-th largest per row, vectorized — the +1 cushions the
-        # possible self row, so the tied-or-above candidate set provably
-        # contains the top-k non-self neighbors; only candidates get the
-        # (-cosine, id asc) lexsort instead of the whole cell
-        n_x = S.shape[1]
-        kth = min(kk, n_x - 1)
-        kv = np.partition(S, n_x - 1 - kth, axis=1)[:, n_x - 1 - kth]
-        out_q, out_n, out_c = [], [], []
-        for i in range(S.shape[0]):
-            sims = S[i]
-            cand = np.nonzero(sims >= kv[i])[0]
-            # total order: cosine desc, neighbor_id asc; exclude self
-            order = cand[np.lexsort((xids[cand], -sims[cand]))]
-            taken = 0
-            for j in order:
-                if xids[j] == qids[i]:
-                    continue
-                out_q.append(qids[i])
-                out_n.append(xids[j])
-                out_c.append(sims[j])
-                taken += 1
-                if taken == kk:
-                    break
-        return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cosine": out_c})
+        Q, X = np.stack(qpdf["v"].to_numpy()), np.stack(xpdf["v"].to_numpy())
+        # the final window re-ranks; an unused UDF output column is not
+        # just waste here — Spark 4.1 then pruned the index side's inputs
+        return _topk(qpdf["vid"].to_numpy(), Q, xpdf["vid"].to_numpy(), X, k, buf).drop(columns="rank")
 
     local = (
         probed.select("cell", "vid", "v")
@@ -891,75 +863,6 @@ def ivf_hash_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
-
-
-def ivf_topk(
-    emb: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) ANN: seeded KMeans coarse quantizer; each vector
-    indexes into its cell, each query probes its ``n_probe`` nearest cells
-    — the classic FAISS-IVF shape on DataFrames. Join is (query × probed
-    cell) equi-join on cell id: |N|²/n_cells expected compare volume.
-    Recall vs brute_topk is a pytest invariant (KMeans is seeded but not
-    bit-stable across environments, so no SQL oracle)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    u = with_unit_vectors(emb, vec_col).select(id_col, "unit")
-    vecs = u.withColumn("fv", array_to_vector("unit"))
-    km = KMeans(k=n_cells, seed=seed, featuresCol="fv", predictionCol="cell")
-    model = km.fit(vecs)
-    centers = model.clusterCenters()
-
-    # assign index side to its cell
-    indexed = model.transform(vecs).select(id_col, "unit", "cell")
-
-    # query side: n_probe nearest centers via literal center arrays
-    centers_lit = F.array(*[
-        F.struct(F.lit(i).alias("cell"), F.array(*[F.lit(float(x)) for x in c]).alias("cv"))
-        for i, c in enumerate(centers)
-    ])
-    probed = (
-        u.withColumn(
-            "cells",
-            F.slice(
-                F.reverse(
-                    F.array_sort(
-                        F.transform(
-                            centers_lit,
-                            lambda s: F.struct(
-                                _dot(F.col("unit"), s["cv"]).alias("sim"), s["cell"].alias("cell")
-                            ),
-                        )
-                    )
-                ),
-                1,
-                n_probe,
-            ),
-        )
-        .select(id_col, "unit", F.explode(F.transform("cells", lambda s: s["cell"])).alias("cell"))
-    )
-
-    a = probed.select(F.col(id_col).alias("query_id"), "cell", F.col("unit").alias("ua"))
-    b = indexed.select(F.col(id_col).alias("neighbor_id"), "cell", F.col("unit").alias("ub"))
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(_dot(F.col("ua"), F.col("ub")), 6).alias("cosine"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "cosine")
     )
@@ -1026,34 +929,18 @@ def semdedup_incremental(
 
     tau = threshold
     id_type = emb.schema[id_col].dataType.simpleString()
+    buf: dict = {}
 
-    def cell_best(npdf: pd.DataFrame, opdf: pd.DataFrame) -> pd.DataFrame:
+    def cell_best(npdf, opdf):
+        # a cell present on only one cogroup side has nothing to score
         if npdf.empty or opdf.empty:
             return pd.DataFrame({"nid": [], "dup_of": [], "cosine": []})
-        N = np.stack(npdf["nv"].to_numpy())
-        O = np.stack(opdf["ov"].to_numpy())
-        nn = np.linalg.norm(N, axis=1)
-        on = np.linalg.norm(O, axis=1)
-        # zero-norm convention shared by semdedup and the DuckDB oracles:
-        # cosine with a zero vector is 0.0 (dot is 0 there, so guarding the
-        # norm to 1 yields it; SQL mirrors with COALESCE(dot/NULLIF(prod,0),0))
-        nn[nn == 0] = 1.0
-        on[on == 0] = 1.0
-        S = np.round((N @ O.T) / np.outer(nn, on), 6)
-        oids = opdf["oid"].to_numpy()
-        out_n, out_o, out_c = [], [], []
-        for i, nid in enumerate(npdf["nid"].to_numpy()):
-            sims = S[i]
-            mask = sims >= tau
-            if not mask.any():
-                continue
-            # best = cosine desc, oid asc
-            order = np.lexsort((oids[mask], -sims[mask]))
-            j = np.flatnonzero(mask)[order[0]]
-            out_n.append(nid)
-            out_o.append(oids[j])
-            out_c.append(sims[j])
-        return pd.DataFrame({"nid": out_n, "dup_of": out_o, "cosine": out_c})
+        N, O = np.stack(npdf["nv"].to_numpy()), np.stack(opdf["ov"].to_numpy())
+        # best existing match = top-1 under (cosine desc, oid asc); new and
+        # existing ids are disjoint, so the self exclusion never fires
+        top = _topk(npdf["nid"].to_numpy(), N, opdf["oid"].to_numpy(), O, 1, buf)
+        top = top[top["cosine"] >= tau]
+        return top.rename(columns={"query_id": "nid", "neighbor_id": "dup_of"})[["nid", "dup_of", "cosine"]]
 
     best = (
         new.groupBy("cell")
@@ -1085,9 +972,8 @@ def kmeans_lloyd(
 ) -> DataFrame:
     """Deterministic Lloyd k-means over an embedding column — the TRAINED
     coarse quantizer (reference trains sklearn KMeans for clustering-side
-    analysis; Spark MLlib's KMeans backs ``ann_ivf_topk`` but its RNG
-    init is engine-private, so that query is rows-only). This trainer is
-    fully hash-oracle-able: md5-ordered seeding (smallest k hashes),
+    analysis; Spark MLlib's KMeans RNG init is engine-private, so it is
+    not hash-oracle-able). This trainer is fully hash-oracle-able: md5-ordered seeding (smallest k hashes),
     distances rounded to 9dp before the argmin (the repo's cross-engine
     compare guard), and centroid updates as 9dp-rounded DECIMAL component
     sums divided once and re-rounded to 12dp — every iterate is
@@ -1531,28 +1417,6 @@ def _pq_lut(pdist: DataFrame) -> DataFrame:
     )
 
 
-#: refine shortlists larger than this take the vectorized Arrow kernel:
-#: every audited pinned operating point (registry rerank=60, the sweep's
-#: 2/4/10-probe points, the sf-scale auto resolutions <= ~240) stays on
-#: the HOF expression path the DuckDB oracles mirror fold-for-fold, while
-#: the co-scaled default at corpus scale — where the refine is |Q|·n/43
-#: pairs — gets numpy row-wise dots instead of interpreted per-element
-#: folds (measured at the 30x probe: the HOF refine was 254.6 s of a
-#: 554.6 s all-auto wall).
-#:
-#: CONSTRAINT for oracle-mirrored callers (r9 ADVICE): the two kernels'
-#: row-identity is only guaranteed up to summation order — numpy's einsum
-#: accumulates pairwise/SIMD while the HOF fold (and DuckDB's
-#: list_cosine_similarity) accumulate sequentially, so a dot whose two
-#: orderings differ by an ulp can straddle the 6dp rounding boundary.
-#: Every DuckDB-hash-oracled path must therefore resolve to a rerank <=
-#: this threshold (all pinned operating points do: registry rerank=60,
-#: sweep points <= 240); if an oracle path ever co-scales past it, either
-#: pass vectorized=False explicitly or make the vectorized kernel
-#: accumulate in the same sequential order (math.fsum per pair).
-IVF_REFINE_VECTORIZED_MIN_RERANK = 512
-
-
 def _ivf_pq_shortlist_refine(
     qside: DataFrame,
     xside: DataFrame,
@@ -1562,21 +1426,11 @@ def _ivf_pq_shortlist_refine(
     rerank: int,
     m: int,
     lut_offsets: list[int],
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """ADC-ranked shortlist + exact-cosine refine — the serve tail shared
     by the inline operator and the store-backed search. ``eq``/``ex`` are
-    the raw (vid, v) query/index vectors for the refine join.
-
-    ``vectorized=None`` dispatches the refine kernel on the shortlist
-    size: above IVF_REFINE_VECTORIZED_MIN_RERANK pairs per query the
-    per-pair cosine runs as one numpy batch per Arrow chunk (mapInPandas)
-    instead of the interpreted aggregate/zip_with fold — the same 6dp
-    dot/(|a||b|) formula, and BOTH kernels apply the repo's
-    zero-norm→cosine-0 convention (a zero-norm side divides as norm 1,
-    r10: the HOF denominator is guarded, so dispatch can never change an
-    answer; a parity gate pins the kernels row-identical on a fixture
-    with an injected zero vector)."""
+    the raw (vid, v) query/index vectors for the refine join; each Arrow
+    batch of (query, neighbor) pairs is scored by ``_cosine_pairs``."""
     # decimal-exact ADC (order-free, matching the oracle's SUM over the
     # m lookup rows)
     adc = F.round(
@@ -1598,56 +1452,23 @@ def _ivf_pq_shortlist_refine(
         .select("query_id", "neighbor_id")
     )
     # exact refine of the PQ shortlist: |Q| x rerank rows, shared cosine
-    if vectorized is None:
-        vectorized = rerank > IVF_REFINE_VECTORIZED_MIN_RERANK
     paired = short.join(
         eq.select(F.col("vid").alias("query_id"), F.col("v").alias("va")), "query_id"
     ).join(ex.select(F.col("vid").alias("neighbor_id"), F.col("v").alias("vb")), "neighbor_id")
-    if vectorized:
-        import numpy as np
-        import pandas as pd
 
-        def refine_batches(it):
-            for pdf in it:
-                if pdf.empty:
-                    continue
-                va = np.stack(pdf["va"].to_numpy())
-                vb = np.stack(pdf["vb"].to_numpy())
-                na = np.linalg.norm(va, axis=1)
-                nb = np.linalg.norm(vb, axis=1)
-                na[na == 0] = 1.0
-                nb[nb == 0] = 1.0
-                cosv = np.round(np.einsum("ij,ij->i", va, vb) / (na * nb), 6)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"],
-                        "neighbor_id": pdf["neighbor_id"],
-                        "cosine": cosv,
-                    }
-                )
+    import numpy as np
 
-        id_type = dict(paired.dtypes)["query_id"]
-        nid_type = dict(paired.dtypes)["neighbor_id"]
-        fin = paired.mapInPandas(
-            refine_batches,
-            schema=f"query_id {id_type}, neighbor_id {nid_type}, cosine double",
-        )
-    else:
-        # zero-norm guard (r9 ADVICE): a zero-norm side divides as norm 1 —
-        # exactly the Arrow kernel's na[na==0]=1 — so a zero vector yields
-        # cosine 0 on BOTH kernels and the rerank-size dispatch can never
-        # change an answer (the bare quotient was NaN here, 0 there)
-        na = F.sqrt(_dot(F.col("va"), F.col("va")))
-        nb = F.sqrt(_dot(F.col("vb"), F.col("vb")))
-        cos = F.round(
-            _dot(F.col("va"), F.col("vb"))
-            / (
-                F.when(na == 0, F.lit(1.0)).otherwise(na)
-                * F.when(nb == 0, F.lit(1.0)).otherwise(nb)
-            ),
-            6,
-        )
-        fin = paired.select("query_id", "neighbor_id", cos.alias("cosine"))
+    def refine_batches(it):
+        for pdf in it:
+            if len(pdf):
+                cos = _cosine_pairs(np.stack(pdf["va"].to_numpy()), np.stack(pdf["vb"].to_numpy()))
+                yield pdf[["query_id", "neighbor_id"]].assign(cosine=cos)
+
+    types = dict(paired.dtypes)
+    fin = paired.mapInPandas(
+        refine_batches,
+        schema=f"query_id {types['query_id']}, neighbor_id {types['neighbor_id']}, cosine double",
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         fin.withColumn("rank", F.row_number().over(w))

@@ -1115,13 +1115,6 @@ def q_node2vec_biased_walks_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (ann_ivf_topk — the MLlib-KMeans IVF registry entry — was retired in
-# round 6 per the r5 verdict: its dataflow is the same cell equi-join as
-# the fully hash-oracled ann_ivf_hash_topk, and MLlib KMeans RNG is
-# engine-private so it could never graduate past rows-only. The OPERATOR
-# sim.ivf_topk remains, gated by test_ivf_recall's pytest floor.)
-
-
 @register("quality_classifier_metrics", None)
 def q_quality_classifier_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality filtering — the fastText/WebText-classifier
@@ -1189,8 +1182,7 @@ def q_quality_classifier_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Deterministic Lloyd k-means codebook (round-5: the TRAINED quantizer,
-# fully hash-oracle-checked — MLlib's KMeans behind ann_ivf_topk stays
-# rows-only because its init RNG is engine-private)
+# fully hash-oracle-checked — MLlib's KMeans init RNG is engine-private)
 # ---------------------------------------------------------------------------
 
 

@@ -1098,11 +1098,9 @@ def _ivf_hash_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_ivf_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic-centroid IVF ANN (md5-sampled coarse quantizer) — the
-    hash-oracle-checked sibling of the KMeans ``ann_ivf_topk``: same
-    index/probe/re-rank dataflow, reproducible centroids, so the FULL
-    approximate result is pinned cross-engine. Recall-vs-brute stays a
-    pytest invariant for both variants."""
+    """Deterministic-centroid IVF ANN (md5-sampled coarse quantizer):
+    reproducible centroids, so the FULL approximate result is pinned
+    cross-engine. Recall-vs-brute stays a pytest invariant."""
     return _ivf_hash_shared(spark, sf_dir)
 
 

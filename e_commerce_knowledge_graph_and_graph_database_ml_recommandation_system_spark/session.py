@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Driver heap default: min(24g, half of physical RAM). A fixed 24g on
+    a smaller host lets the local JVM grow until the kernel OOM-kills it;
+    SPARK_GRAFT_DRIVER_MEM overrides."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 * 1024 * 1024)
+    except (ValueError, OSError):
+        return "24g"
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def get_spark(app_name: str = "ekg-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
@@ -45,7 +56,7 @@ def get_spark(app_name: str = "ekg-spark", shuffle_partitions: int | None = None
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.sql.session.timeZone", "UTC")
         # UI off by default (test/bench hygiene); probes that read the
         # REST status API (shuffle-byte accounting in

@@ -40,10 +40,12 @@ def stream_dvid_ingest(
 
     src_dir = f"{out_dir}_src"
     if not os.path.isdir(src_dir):
-        # deterministic row→file assignment (event_id ranges), one file per
-        # injection. Created once: a restart must see the SAME file
-        # identities, or the checkpoint's seen-files log would replay
-        # everything as new input.
+        # contiguous event_id ranges, one file per injection. The range
+        # boundaries are SAMPLED by repartitionByRange (its seed follows the
+        # RDD id), so per-file sizes differ from one fresh ingest to the
+        # next; only contiguity and exactly-once coverage are stable.
+        # Created once: a restart must see the SAME file identities, or the
+        # checkpoint's seen-files log would replay everything as new input.
         events = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
         n_parts = max(1, (events.count() + rows_per_batch - 1) // rows_per_batch)
         (
