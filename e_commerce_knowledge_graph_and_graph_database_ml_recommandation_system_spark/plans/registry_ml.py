@@ -1011,16 +1011,15 @@ def q_multimodal_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shared_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (num_walks=1, walk_len=3, p=1.0, q=0.5, seed=42, md5) biased walk
+    """The (num_walks=1, walk_len=3, p=1.0, q=0.5, seed=42) biased walk
     set shared by ``node2vec_biased_walks`` (array form) and
     ``node2vec_biased_walks_flat`` (hash-checked flat form) — previously
     generated twice per verification run (r5 verdict: the two entries were
-    22 s of the sf0.01 wall). The xxhash64 hot path stays covered by
-    test_node2vec_biased_walks."""
+    22 s of the sf0.01 wall)."""
     def build():
         return alg.node2vec_walks(
             shared_edges(spark, sf_dir),
-            num_walks=1, walk_len=3, p=1.0, q=0.5, seed=42, hash_fn="md5",
+            num_walks=1, walk_len=3, p=1.0, q=0.5, seed=42,
         )
 
     return memo(spark, ("biased_walks_n1_l3_s42_md5", sf_dir), build)
@@ -1037,7 +1036,7 @@ def q_node2vec_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _biased_walks_oracle_sql(
     num_walks: int, walk_len: int, p: float, q: float, seed: int, cap: int
 ) -> str:
-    """DuckDB mirror of graph/algorithms.node2vec_walks(hash_fn='md5'):
+    """DuckDB mirror of graph/algorithms.node2vec_walks:
     sorted adjacency lists (duplicates kept, as collect_list does), the
     deterministic candidate-cap thinning, the (prev, x) distance-1 join,
     and the Gumbel-argmax pick — each step one chained CTE. Floats embed

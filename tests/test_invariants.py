@@ -255,7 +255,7 @@ def test_node2vec_embedding_quality(spark):
 def test_louvain_distributed_path(spark):
     """X8, the 100-TB code path: with local_edge_max=0 the size dispatch
     never collects — every round runs the DISTRIBUTED gain-aggregate moves
-    (graph/algorithms.py:459-522), which at test scale is otherwise dead
+    (``_move_sweeps``), which at test scale is otherwise dead
     code (round-2 judge item). Gates: exact run-to-run stability (no RNG),
     a modularity floor, and closeness to the hybrid (driver-finish) result."""
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph import algorithms as alg
@@ -270,8 +270,8 @@ def test_louvain_distributed_path(spark):
     dist2 = alg.louvain(g, **kwargs)
     assert dist.exceptAll(dist2).count() == 0 and dist2.exceptAll(dist).count() == 0
 
-    q_dist = alg.weighted_modularity(g, dist, weight_col="similarity", undirected=False)
-    q_hybrid = alg.weighted_modularity(
+    q_dist = alg.modularity(g, dist, weight_col="similarity", undirected=False)
+    q_hybrid = alg.modularity(
         g, alg.louvain(g, weight_col="similarity", undirected=False),
         weight_col="similarity", undirected=False,
     )
@@ -779,7 +779,7 @@ def test_discount_range(spark):
 
 def test_node2vec_biased_walks(spark):
     """X4 2nd-order: steps follow real edges; fully deterministic
-    (xxhash64-keyed selection — no rand()), so two runs are identical."""
+    (md5-keyed selection — no rand()), so two runs are identical."""
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph.build import build_edges
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph import algorithms as alg
 
@@ -1064,8 +1064,26 @@ def test_louvain_local_and_distributed_paths_agree(spark):
         assert len({m[f"a{i}"] for i in range(6)}) == 1
         assert len({m[f"b{i}"] for i in range(6)}) == 1
         assert m["a0"] != m["b0"]
-        q = alg.weighted_modularity(df, res)
+        q = alg.modularity(df, res)
         assert abs(q - 0.467741935483871) < 1e-9, f"Q {q} not ideal for two cliques ({kwargs})"
+
+
+def test_louvain_scratch_dir_removed_on_failure(spark, tmp_path, monkeypatch):
+    """louvain keeps its parquet round-trip state under a private temp
+    dir; a failure after the first round-trip must still remove it."""
+    import tempfile
+
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph import algorithms as alg
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("driver-local finish failed")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(alg, "_louvain_local", boom)
+    df = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
+    with pytest.raises(RuntimeError, match="driver-local finish failed"):
+        alg.louvain(df)
+    assert not list(tmp_path.glob("spark_louvain_*"))
 
 
 def test_louvain_beats_lpa_modularity(spark):
@@ -1079,14 +1097,14 @@ def test_louvain_beats_lpa_modularity(spark):
 
     g = sim.similarity_graph(load_table(spark, "embeddings", SF), k=5).cache()
     lou = alg.louvain(g, weight_col="similarity", undirected=False).cache()
-    q_lou = alg.weighted_modularity(g, lou, weight_col="similarity", undirected=False)
+    q_lou = alg.modularity(g, lou, weight_col="similarity", undirected=False)
 
     lpa = alg.label_propagation(
         g.select(F.col("src").cast("string").alias("src"), F.col("dst").cast("string").alias("dst")),
         max_iter=4,
         undirected=False,
     )
-    q_lpa = alg.weighted_modularity(g, lpa, weight_col="similarity", undirected=False)
+    q_lpa = alg.modularity(g, lpa, weight_col="similarity", undirected=False)
 
     assert q_lou > 0.0, f"louvain modularity {q_lou:.4f} not positive"
     assert q_lou >= q_lpa, f"louvain {q_lou:.4f} < lpa {q_lpa:.4f}"
